@@ -111,13 +111,11 @@ def main(argv: list[str] | None = None) -> int:
                     password=cfg.db_password, dbname=cfg.db_name,
                 )
 
-            n = df.count()
-            write_batch(
+            return write_batch(
                 df, connect, strategy=cfg.dup_strategy,
                 batch_size=cfg.jdbc_batch_size,
                 num_partitions=cfg.sink_num_partitions,
             )
-            return n
 
     metrics = run_backfill(spark, cfg, sink=sink, rebuild=a.rebuild)
     # epilogue, main.go:156-165 (exact counts — Q2 divergence)

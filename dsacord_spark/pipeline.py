@@ -24,7 +24,9 @@ from dsacord_spark.sinks.parquet import write_decisions_parquet
 from dsacord_spark.sources.stager import stage_range, stage_range_distributed
 from dsacord_spark.sources.urlgen import url_table
 from dsacord_spark.sources.zipsource import read_staged_zips
-from dsacord_spark.transform import decisions_transform, split_quarantine, with_dq_metrics
+from dsacord_spark.transform import (
+    decisions_transform, observation_ready, split_quarantine, with_dq_metrics,
+)
 
 
 @dataclass
@@ -51,6 +53,13 @@ def run_backfill(
     written count; defaults to the date-partitioned parquet sink under
     cfg.landing_dir + '/decisions'. `opener` injects the HTTP transport
     (tests use fakes; production uses urllib).
+
+    rows_quarantined comes from the dq observation the sink's first
+    action completes. A custom sink whose first action reads the whole
+    frame as a Dataset action (`jdbc.write_batch`, a DataFrame write)
+    gets the count for free; after one that runs no action, or only RDD
+    actions such as `foreachPartition`, the quarantined split is counted
+    in one more pass over the extraction.
 
     Scope: processes THIS RUN's staged ZIPs (the path list stage_range
     returns), so re-running with a new date range into a shared landing
@@ -194,19 +203,20 @@ def run_backfill(
     # the observation sits below the quarantine filter, so the sink's own
     # action populates it — no second scan of the extraction pipeline
     # (the reference re-reads nothing either; Q2 exactness, for free).
-    # ONLY the default sink may consult it: Observation.get BLOCKS until
-    # some action runs over the observed lineage, and a custom sink that
-    # never executes one would hang the backfill inside the JVM wait
-    # instead of reaching any fallback (r9 ADVICE) — for custom sinks we
-    # always pay one explicit count of the quarantined split (exact,
-    # never a fabricated 0 — r8 ADVICE).
-    if custom_sink:
-        metrics.rows_quarantined = quarantined.count()
-    else:
+    # Observation.get BLOCKS until some action runs over the observed
+    # lineage, and a custom sink that never executes one would hang the
+    # backfill inside the JVM wait. The default sink always runs one; a
+    # custom sink's is read only if it has already completed
+    # (observation_ready), else the quarantined split is counted —
+    # exact, never a fabricated 0.
+    observed = None
+    if not custom_sink or observation_ready(dq):
         try:
-            metrics.rows_quarantined = int(dq.get["empty_uuid"])
+            observed = int(dq.get["empty_uuid"])
         except Exception:
-            # metrics-event loss on the default path: recount, exact
-            metrics.rows_quarantined = quarantined.count()
+            pass  # metrics-event loss: recount below, exact
+    metrics.rows_quarantined = (
+        quarantined.count() if observed is None else observed
+    )
     metrics.elapsed_s = time.monotonic() - t0
     return metrics

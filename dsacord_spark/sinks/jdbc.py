@@ -11,26 +11,37 @@ Strategies (config.DUP_STRATEGIES):
                       every batch (--skipCheckingDuplicates,
                       utils.go:99-104) — idempotent, the streaming default
 
-Spark's JDBC writer has no upsert mode, so upserts run through
-`foreachBatch`/`foreachPartition` with a DB-API connection per partition
-(psycopg if installed — not bundled in this container, hence the gated
-import and an injectable connection factory; tests use sqlite/fakes).
+Spark's JDBC writer has no upsert mode, so `write_batch` runs as one
+DataFrame action: `mapInArrow` hands each sink partition's rows to a
+Python writer as Arrow batches, and the writer talks to the database
+through a DB-API connection per partition (psycopg if installed —
+hence the gated import and an injectable connection factory; tests use
+sqlite/fakes). The streaming path calls it from `foreachBatch`.
 
 Scale notes: sink parallelism is capped by `num_partitions` (the
-reference advises <= 5 workers against Postgres, main.go:54); batch size
-1000 matches utils.go:89; within a batch rows are deduped on the upsert
-key first (keep-latest) so ON CONFLICT never sees the same key twice in
-one statement (Postgres would reject it) — this also encodes the
-epoch-level dedup required for exactly-once streaming replay.
+reference advises <= 5 workers against Postgres, main.go:54); each chunk
+of at most `batch_size` rows (1000 matches utils.go:89) goes out as ONE
+multi-row INSERT, as gorm's CreateInBatches sends it, bounded so no
+statement binds more than MAX_STATEMENT_PARAMS values; within a batch
+rows are deduped on the upsert key first (keep-latest) so ON CONFLICT
+never sees the same key twice in one statement (Postgres would reject
+it) — this also encodes the epoch-level dedup required for exactly-once
+streaming replay.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window as W, functions as F
+from pyspark.sql.types import TimestampType
 
 from dsacord_spark.schema import DECISIONS_SCHEMA, SINK_INDEX_COLUMNS, UPSERT_KEY
+
+# psycopg binds parameters server-side, and the wire protocol counts a
+# statement's parameters in 16 bits
+MAX_STATEMENT_PARAMS = 65535
 
 _SPARK_TO_PG = {
     "string": "text",
@@ -60,20 +71,22 @@ def create_table_ddl(table: str = "decisions") -> list[str]:
     return stmts
 
 
-def insert_sql(table: str, columns: list[str]) -> str:
-    ph = ", ".join(["%s"] * len(columns))
-    return f"INSERT INTO {table} ({', '.join(columns)}) VALUES ({ph})"
+def insert_sql(table: str, columns: list[str], rows: int = 1) -> str:
+    """INSERT of `rows` rows in one VALUES list (%s placeholders)."""
+    row = "(" + ", ".join(["%s"] * len(columns)) + ")"
+    return f"INSERT INTO {table} ({', '.join(columns)}) VALUES {', '.join([row] * rows)}"
 
 
-def upsert_sql(table: str, columns: list[str], key: str = UPSERT_KEY) -> str:
+def upsert_sql(
+    table: str, columns: list[str], key: str = UPSERT_KEY, rows: int = 1
+) -> str:
     """K2 — gorm clause.OnConflict{UpdateAll: true} equivalent
     (utils.go:100-104)."""
-    ph = ", ".join(["%s"] * len(columns))
     updates = ", ".join(
         f"{c} = EXCLUDED.{c}" for c in columns if c != key
     )
     return (
-        f"INSERT INTO {table} ({', '.join(columns)}) VALUES ({ph}) "
+        f"{insert_sql(table, columns, rows)} "
         f"ON CONFLICT ({key}) DO UPDATE SET {updates}"
     )
 
@@ -104,6 +117,42 @@ def is_unique_violation(exc: Exception) -> bool:
     return "23505" in str(exc) or "UNIQUE constraint failed" in str(exc)
 
 
+def execute_chunks(
+    cur, table: str, columns: list[str], rows: list[tuple],
+    batch_size: int, upsert: bool,
+) -> None:
+    """One multi-row INSERT (or upsert) per chunk of at most `batch_size`
+    rows (utils.go:89,92-97), and of at most MAX_STATEMENT_PARAMS bound
+    values."""
+    per_stmt = max(1, min(batch_size, MAX_STATEMENT_PARAMS // len(columns)))
+    build = upsert_sql if upsert else insert_sql
+    for i in range(0, len(rows), per_stmt):
+        chunk = rows[i : i + per_stmt]
+        cur.execute(
+            build(table, columns, rows=len(chunk)),
+            [v for row in chunk for v in row],
+        )
+
+
+def _arrow_rows(batches) -> list[tuple]:
+    """Rows of Arrow record batches as Python tuples, with the values a
+    pickled Row would carry: Arrow hands timestamps over tz-aware, so
+    they go through TimestampType.fromInternal, as the Row path's do,
+    and bind as the same naive local datetimes."""
+    from_ts = TimestampType().fromInternal
+    rows: list[tuple] = []
+    for batch in batches:
+        cols = []
+        for col in batch.columns:
+            if pa.types.is_timestamp(col.type) and col.type.tz is not None:
+                micros = col.cast(pa.timestamp("us", col.type.tz)).cast(pa.int64())
+                cols.append([from_ts(v) for v in micros.to_pylist()])
+            else:
+                cols.append(col.to_pylist())
+        rows.extend(zip(*cols))
+    return rows
+
+
 def write_batch(
     df: DataFrame,
     connection_factory: Callable,
@@ -111,44 +160,49 @@ def write_batch(
     strategy: str = "error",
     batch_size: int = 1000,
     num_partitions: int = 5,
-) -> None:
-    """K1/K3 — partition-parallel batched write with strategy handling.
+) -> int:
+    """K1/K3 — partition-parallel batched write with strategy handling;
+    returns the number of rows written.
 
-    One DB transaction per partition (the reference's one-txn-per-ZIP,
-    utils.go:91, mapped to Spark's unit of parallelism), executemany in
-    `batch_size` chunks (utils.go:89,92-97)."""
+    One DataFrame action: `mapInArrow` over `num_partitions` partitions,
+    one DB transaction per partition (the reference's one-txn-per-ZIP,
+    utils.go:91, mapped to Spark's unit of parallelism), one multi-row
+    statement per chunk (`execute_chunks`). Being a Dataset action, it
+    completes the observations on `df`'s lineage when it returns."""
     if strategy not in ("error", "upsert-on-conflict", "always-upsert"):
         raise ValueError(f"unknown strategy {strategy!r}")
     deduped = dedup_batch(df) if strategy != "error" else df
     cols = [c for c in deduped.columns if not c.startswith("_source")]
-    ins, ups = insert_sql(table, cols), upsert_sql(table, cols)
 
-    def run_batches(cur, sql: str, all_rows: list[tuple]) -> None:
-        for i in range(0, len(all_rows), batch_size):
-            chunk = all_rows[i : i + batch_size]
-            if chunk:
-                cur.executemany(sql, chunk)
-
-    def write_partition(rows) -> None:
-        conn = connection_factory()
-        try:
-            cur = conn.cursor()
-            all_rows = [tuple(row[c] for c in cols) for row in rows]
+    def write_partition(batches):
+        rows = _arrow_rows(batches)
+        if rows:
+            conn = connection_factory()
             try:
-                run_batches(cur, ups if strategy == "always-upsert" else ins, all_rows)
-                conn.commit()
-            except Exception as exc:
-                conn.rollback()
-                if strategy == "upsert-on-conflict" and is_unique_violation(exc):
-                    # K3: retry the whole unit as an upsert (main.go:198-204)
-                    run_batches(cur, ups, all_rows)
+                cur = conn.cursor()
+                try:
+                    execute_chunks(cur, table, cols, rows, batch_size,
+                                   strategy == "always-upsert")
                     conn.commit()
-                else:
-                    raise
-        finally:
-            conn.close()
+                except Exception as exc:
+                    conn.rollback()
+                    if strategy == "upsert-on-conflict" and is_unique_violation(exc):
+                        # K3: retry the whole unit as an upsert (main.go:198-204)
+                        execute_chunks(cur, table, cols, rows, batch_size, True)
+                        conn.commit()
+                    else:
+                        raise
+            finally:
+                conn.close()
+        yield pa.RecordBatch.from_pydict({"n": pa.array([len(rows)], pa.int64())})
 
-    deduped.coalesce(num_partitions).foreachPartition(write_partition)
+    written = (
+        deduped.select(*cols)
+        .coalesce(num_partitions)
+        .mapInArrow(write_partition, "n long")
+        .collect()
+    )
+    return sum(r["n"] for r in written)
 
 
 def pg_connection_factory(
@@ -193,16 +247,3 @@ def pg_connection_factory(
 
         return _pgwire_factory
 
-
-def jdbc_append(df: DataFrame, url: str, table: str, properties: dict) -> None:
-    """K1 via Spark's native JDBC writer (no upsert): append with
-    batchsize 1000 — used when strategy='error' and a JVM driver exists."""
-    (
-        df.write.format("jdbc")
-        .option("url", url)
-        .option("dbtable", table)
-        .option("batchsize", 1000)
-        .options(**properties)
-        .mode("append")
-        .save()
-    )

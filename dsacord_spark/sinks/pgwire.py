@@ -6,7 +6,9 @@ Python driver.
 
 Scope is deliberately small: trust-auth over a unix socket (no password
 flows), text-format results, one statement batch per Query message. The
-message layout follows the public protocol documentation
+sink sends each chunk as one multi-row INSERT through `execute`: one
+Query message, one round-trip. The message layout follows the public
+protocol documentation
 (https://www.postgresql.org/docs/current/protocol-message-formats.html):
 StartupMessage(196608), then 'R' AuthenticationOk, 'S'/'K' session info,
 'Z' ReadyForQuery; per query: 'Q' -> 'T' RowDescription / 'D' DataRow /

@@ -97,3 +97,12 @@ def with_dq_metrics(typed: DataFrame, name: str = "dq"):
         ),
     )
     return df, obs
+
+
+def observation_ready(obs) -> bool:
+    """Whether an action over the observed lineage has completed `obs`,
+    checked without blocking (`Observation.get` waits for one). A Dataset
+    action (collect, a write, `mapInArrow(...).collect()`) completes it
+    before it returns; an RDD action such as `foreachPartition` does not
+    on PySpark 4.1.2."""
+    return obs._jo is not None and bool(obs._jo.future().isCompleted())

@@ -68,15 +68,11 @@ def test_run_backfill_end_to_end(spark, tmp_path):
     ]
 
 
-def test_default_sink_runs_extraction_exactly_once(spark, tmp_path, monkeypatch):
-    """r7 verdict #2: the default sink used to count the dataflow and then
-    write it — executing the binaryFile->zip->CSV->transform pipeline
-    twice. Pin single execution by counting every wire row the extraction
-    emits in a Spark accumulator: 2 days x 2 CSV rows = 4; a re-executed
-    dataflow would double it."""
+def _backfill_counting_extraction(spark, tmp_path, monkeypatch, served, sink=None):
+    """run_backfill over days 2025-01-01..02 served from `served`;
+    returns (metrics, wire rows the extraction emitted), counted in a
+    Spark accumulator so a re-executed dataflow shows as a multiple."""
     from dsacord_spark.sources import zipsource
-
-    served = {"2025-01-01": _day_zip("d1"), "2025-01-02": _day_zip("d2")}
 
     def opener(url):
         for dt, data in served.items():
@@ -99,10 +95,58 @@ def test_default_sink_runs_extraction_exactly_once(spark, tmp_path, monkeypatch)
         date_to=date(2025, 1, 2),
         landing_dir=str(tmp_path / "landing"),
     )
-    metrics = run_backfill(spark, cfg, opener=opener)  # default sink
+    metrics = run_backfill(spark, cfg, sink=sink, opener=opener)
+    return metrics, rows_emitted.value
+
+
+def test_default_sink_runs_extraction_exactly_once(spark, tmp_path, monkeypatch):
+    """r7 verdict #2: the default sink used to count the dataflow and then
+    write it — executing the binaryFile->zip->CSV->transform pipeline
+    twice. Pin single execution by counting every wire row the extraction
+    emits in a Spark accumulator: 2 days x 2 CSV rows = 4; a re-executed
+    dataflow would double it."""
+    served = {"2025-01-01": _day_zip("d1"), "2025-01-02": _day_zip("d2")}
+    metrics, rows_emitted = _backfill_counting_extraction(
+        spark, tmp_path, monkeypatch, served  # default sink
+    )
     assert metrics.rows_written == 2        # one per day after dedup
-    assert rows_emitted.value == 4          # 2 wire rows/day, extracted ONCE
+    assert rows_emitted == 4                # 2 wire rows/day, extracted ONCE
     assert metrics.rows_quarantined == 0    # observe populated by the write
+
+
+def test_write_batch_sink_runs_extraction_exactly_once(spark, tmp_path, monkeypatch):
+    """A custom sink whose first action is `write_batch`'s mapInArrow
+    write completes the dq observation, so run_backfill reads the exact
+    quarantined count from it instead of re-running the extraction to
+    count the quarantined split: 2 days x 2 wire rows = 4, once."""
+    import sqlite3
+
+    from pyspark.sql import functions as F
+
+    from dsacord_spark.sinks.jdbc import write_batch
+    from tests.test_sink import _sqlite_factory
+
+    db = str(tmp_path / "sink.db")
+    con = sqlite3.connect(db)
+    con.execute("CREATE TABLE decisions (uuid TEXT PRIMARY KEY, category TEXT, created_at TEXT)")
+    con.commit()
+    con.close()
+
+    def sink(df):
+        df = df.select("uuid", "category", F.col("created_at").cast("string").alias("created_at"))
+        return write_batch(df, _sqlite_factory(db), strategy="always-upsert", num_partitions=2)
+
+    served = {"2025-01-01": _day_zip("d1"), "2025-01-02": _day_zip("")}
+    metrics, rows_emitted = _backfill_counting_extraction(
+        spark, tmp_path, monkeypatch, served, sink=sink
+    )
+    con = sqlite3.connect(db)
+    stored = con.execute("SELECT uuid FROM decisions").fetchall()
+    con.close()
+    assert stored == [("d1",)]
+    assert metrics.rows_written == 1        # write_batch's own count
+    assert metrics.rows_quarantined == 2    # day 2's empty-uuid pair
+    assert rows_emitted == 4                # extracted ONCE, no recount
 
 
 def test_default_sink_handles_all_quarantined_empty_write(spark, tmp_path):

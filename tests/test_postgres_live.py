@@ -198,7 +198,8 @@ class TestLiveSink:
         assert size and ("bytes" in size or "kB" in size or "MB" in size)
 
     def test_batch_size_chunking(self, spark, factory, fresh_table):
-        """2500 rows through 1000-row executemany chunks (utils.go:89)."""
+        """2500 rows through 1000-row chunks, one multi-row INSERT each
+        (utils.go:89)."""
         rows = [(f"u{i}", f"e{i}", None, T0) for i in range(2500)]
         write_batch(_decisions_df(spark, rows), factory,
                     strategy="error", num_partitions=2)

@@ -11,8 +11,10 @@ import sqlite3
 import pytest
 
 from dsacord_spark.sinks.jdbc import (
+    MAX_STATEMENT_PARAMS,
     create_table_ddl,
     dedup_batch,
+    execute_chunks,
     insert_sql,
     is_unique_violation,
     table_size_sql,
@@ -22,15 +24,15 @@ from dsacord_spark.sinks.jdbc import (
 
 
 def _sqlite_factory(db_path: str):
-    """Connection factory usable inside foreachPartition (pickled to the
-    Python worker): adapts paramstyle %s -> ?."""
+    """Connection factory usable inside the sink's Python workers
+    (pickled to them): adapts paramstyle %s -> ?."""
 
     class Cur:
         def __init__(self, cur):
             self._cur = cur
 
-        def executemany(self, sql, rows):
-            self._cur.executemany(sql.replace("%s", "?"), rows)
+        def execute(self, sql, params):
+            self._cur.execute(sql.replace("%s", "?"), params)
 
     class Conn:
         def __init__(self):
@@ -140,6 +142,49 @@ def test_sql_generation():
     assert "ON CONFLICT (uuid) DO UPDATE SET x = EXCLUDED.x" in ups
     assert "uuid = EXCLUDED" not in ups  # key not updated
     assert "pg_total_relation_size" in table_size_sql()
+
+
+class _RecordingCursor:
+    def __init__(self):
+        self.statements = []
+
+    def execute(self, sql, params):
+        self.statements.append((sql, list(params)))
+
+
+@pytest.mark.parametrize("ncols", [39, 3])
+@pytest.mark.parametrize("batch_size", [1000, 5000])
+@pytest.mark.parametrize("upsert", [False, True])
+def test_execute_chunks_bounds_statements(ncols, batch_size, upsert):
+    """One multi-row statement per chunk: no statement carries more than
+    batch_size rows or more than MAX_STATEMENT_PARAMS parameters (39
+    columns x 5000 rows would be 195k), and every row goes out once."""
+    cols = ["uuid"] + [f"c{i}" for i in range(ncols - 1)]
+    rows = [tuple(f"r{r}c{c}" for c in range(ncols)) for r in range(2500)]
+    cur = _RecordingCursor()
+    execute_chunks(cur, "t", cols, rows, batch_size, upsert)
+    sent = []
+    for sql, params in cur.statements:
+        n = len(params) // ncols
+        assert len(params) == n * ncols
+        assert sql.count("%s") == len(params)
+        assert sql.startswith("INSERT INTO t")
+        assert ("ON CONFLICT (uuid)" in sql) == upsert
+        assert n <= batch_size
+        assert len(params) <= MAX_STATEMENT_PARAMS
+        sent += [tuple(params[i : i + ncols]) for i in range(0, len(params), ncols)]
+    assert sent == rows
+
+
+def test_write_batch_returns_rows_written(spark, db):
+    df = _make_df(
+        spark,
+        [("a", "t1", "2025-01-01 00:00:00"), ("a", "t2", "2025-02-01 00:00:00"),
+         ("b", "t3", None), ("c", "t4", None)],
+    )
+    n = write_batch(df, _sqlite_factory(db), strategy="always-upsert",
+                    batch_size=2, num_partitions=2)
+    assert n == 3 == len(_all(db))
 
 
 def test_unique_violation_sniffer():
